@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from video_metadata_db_spark.__main__ import main
 from video_metadata_db_spark.functions.scalar import TITLE_NOT_SET, in_filtered_directory
 from video_metadata_db_spark.operators.parity import merge_metadata_dbs, update_new_files, variant_report
 from video_metadata_db_spark.operators.pipeline import build_metadata_records, filter_candidates
@@ -92,6 +93,34 @@ def test_sort_is_whole_line_desc(spark, built):
     b = boundary_sorted(to_boundary(records))
     lines = ["\t".join("" if v is None else v for v in r) for r in b.collect()]
     assert lines == sorted(lines, reverse=True)
+
+
+def test_sort_key_is_the_written_line_with_null_cells(spark, tmp_path):
+    """NULL cells are written as empty cells, so they must sort as empty
+    cells: ``concat_ws`` alone skips them and would order
+    ``1920<TAB><TAB>x`` (key ``1920<TAB>x``) ahead of ``1920<TAB>a<TAB>y``.
+    Empty cells come from audio-less videos and from TSV cells that
+    ``-m`` reads back as NULL."""
+    b = spark.createDataFrame([("1920", None, "x"), ("1920", "a", "y")], "w string, a string, b string")
+    lines = ["\t".join("" if v is None else v for v in r) for r in boundary_sorted(b).collect()]
+    assert lines == ["1920\ta\ty", "1920\t\tx"]
+
+    base = ["1920", "1080", "1:30:00", "1.0GiB", "1073741824", "H.264", "Y", "2", "Matroska"]
+    tail = ["T", "N", " ", "N", " ", "/", "/m/t.mkv"]
+    # audio channels + codec: an empty channel cell must sort below "2"
+    db_lines = {
+        "a.tsv": ["\t".join([*base, "", "Zz", *tail]), "\t".join([*base, "", "", *tail])],
+        "b.tsv": ["\t".join([*base, "2", "AAC", *tail])],
+    }
+    for name, rows in db_lines.items():
+        (tmp_path / name).write_text("\n".join(["\t".join(TSV_HEADER), *rows]) + "\n")
+    out = tmp_path / "m"
+    assert main(["-m", *(str(tmp_path / n) for n in db_lines), "--output", str(out)]) == 0
+    merged = []
+    for part in sorted((out / "metadata_db_merged.tsv").glob("part-*")):
+        merged.extend(part.read_text().splitlines()[1:])  # header per part file
+    want = sorted((ln for rows in db_lines.values() for ln in rows), reverse=True)
+    assert merged == want
 
 
 def test_merge_property(spark, built):

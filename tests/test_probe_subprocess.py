@@ -21,8 +21,10 @@ from video_metadata_db_spark.operators.probe import probe_videos
 _FAKE_FFPROBE = r"""#!/bin/sh
 # deterministic ffprobe stand-in: behavior keyed on the input path
 # (last argument).  Echoes its argv into tags.title so tests can assert
-# the exact invocation that reached the process boundary.
+# the exact invocation that reached the process boundary.  Every call
+# appends its path to "<this script>.log", so tests can count probes.
 for last; do :; done
+echo "$last" >> "$0.log"
 case "$last" in
   *bad*)  echo "boom: cannot open '$last'" >&2; exit 1 ;;
   *slow*) sleep 30 ;;

@@ -20,11 +20,14 @@ Engine-side additions (no reference analogue):
     --format tsv|parquet  sink format (parquet = the engine-native form)
 
 Mode dispatch mirrors §3: build (default) = list → filter → probe →
-sidecar join → sorted per-volume TSV; update = the same behind a
-left-anti membership join + append (:579-582); merge = union-all +
-whole-line sort + header (:1361-1456).  Every stage is a DataFrame —
-the thread pool, the five mutexes, and the external OS ``sort`` of the
-reference have no equivalent here by design.
+sidecar join → sorted per-volume TSV; update = a left-anti join of
+the listing against the db's paths BEFORE the probe, so only new files
+and earlier dead letters are probed, then append (:579-582); merge =
+union-all + whole-line sort + header (:1361-1456).  The probe output is
+materialized once per run; the counts, dead letters, variant report and
+sink all read it.  Every stage is a DataFrame — the thread pool, the
+five mutexes, and the external OS ``sort`` of the reference have no
+equivalent here by design.
 """
 
 from __future__ import annotations
@@ -125,30 +128,30 @@ def _probe(
 
 def _build_records(
     spark: SparkSession,
-    roots: list[str],
+    listing: DataFrame,
+    candidates: DataFrame,
     fixture: str | None,
     no_audio: bool = False,
     ffprobe_bin: str = "ffprobe",
-) -> tuple[DataFrame, DataFrame, "Observation"]:
-    """list → filter → probe → sidecar join → (records, dead_letter,
-    probe-stats observation).
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """probe ``candidates`` → sidecar join → (records, dead_letter,
+    probed).
 
-    The ``Observation`` rides the probe stage (reference: the run
-    summary + ``-p`` progress counters, video_metadata_db.py:456-535,
-    :1293-1315): total/failed counts come back WITH the sink action —
-    no second pass over the corpus to report statistics.
+    ``candidates`` is what reaches ffprobe: the filtered listing, or in
+    update mode only its rows missing from the db.  Sidecars still come
+    from the full ``listing``.  ``probed`` is cached; the caller
+    materializes it once, takes every read it needs from it (the run
+    summary, video_metadata_db.py:1293-1315, the sink, the variant
+    report) and unpersists it.
 
     ``no_audio`` drops the audio columns from the sink schema and
     propagates the narrowed field set down to the ffprobe invocation
     (probe elision — ``probe_fields_for``): the audio dissection the
     reference always pays is skipped at the process boundary.
     """
-    from pyspark.sql import Observation
-
-    from .operators.pipeline import build_metadata_records, filter_candidates
+    from .operators.pipeline import build_metadata_records
     from .operators.probe import probe_fields_for
     from .schemas import METADATA_SCHEMA
-    from .sources.listing import list_files
 
     fields = None
     if no_audio:
@@ -159,17 +162,13 @@ def _build_records(
         ]
         fields = probe_fields_for(sink_cols)
 
-    listing = list_files(spark, roots, volume_label=_volume_label(roots)).cache()
-    candidates = filter_candidates(listing, assume_pruned=True)
-    obs = Observation("probe_stats")
-    probed = _probe(spark, candidates, fixture, fields, ffprobe_bin).observe(
-        obs,
-        F.count(F.lit(1)).alias("n_probed"),
-        F.count(F.col("error")).alias("n_failed"),
-    )
+    probed = _probe(spark, candidates, fixture, fields, ffprobe_bin).cache()
+    # the rows to assemble are the cached probed paths; re-deriving them
+    # from ``candidates`` would re-run the update's db read on every action
+    probed_listing = listing.join(probed.select("path"), "path", "left_semi")
     sidecars = listing.filter(F.col("name").rlike(r"\.srt$")).select("path", "size_bytes")
-    records, dead = build_metadata_records(listing, probed, sidecars, assume_pruned=True)
-    return records, dead, obs
+    records, dead = build_metadata_records(probed_listing, probed, sidecars, assume_pruned=True)
+    return records, dead, probed
 
 
 def _volume_label(roots: list[str]) -> str:
@@ -183,39 +182,71 @@ def _volume_label(roots: list[str]) -> str:
         return os.path.sep
 
 
+def _db_path(out_dir: str, fmt: str) -> str:
+    name = "metadata_db.parquet" if fmt == "parquet" else "metadata_db.tsv"
+    return os.path.join(out_dir, name)
+
+
 def _write(records: DataFrame, out_dir: str, fmt: str, mode: str) -> str:
     from .sources.tsv import write_metadata_tsv
 
+    path = _db_path(out_dir, fmt)
     if fmt == "parquet":
-        path = os.path.join(out_dir, "metadata_db.parquet")
         records.write.mode(mode).parquet(path)
     else:
-        path = os.path.join(out_dir, "metadata_db.tsv")
         write_metadata_tsv(records, path, header=True, mode=mode)
     return path
 
 
-def _report(stats: dict, dead: DataFrame, records: DataFrame, verbose: bool) -> None:
-    n_total, n_fail = stats.get("n_probed", 0), stats.get("n_failed", 0)
-    print(f"files probed: {n_total}, ok: {n_total - n_fail}, failed: {n_fail}")
+def _db_keys(spark: SparkSession, out_dir: str, fmt: str) -> DataFrame | None:
+    """The existing db's ``path`` keys, or None when there is no db yet
+    (update then degenerates to build, :1254-1283).
+
+    Only a missing db path falls back; a db that exists but cannot be
+    read raises, so a corrupt db never turns into a full re-append.
+    """
+    from pyspark.errors import AnalysisException
+
+    from .sources.tsv import from_boundary, read_metadata_tsv
+
+    path = _db_path(out_dir, fmt)
+    try:
+        if fmt == "parquet":
+            db = spark.read.parquet(path)
+        else:
+            db = from_boundary(read_metadata_tsv(spark, path, header=True))
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+    return db.select("path")
+
+
+def _report(
+    n_total: int, n_fail: int, dead: DataFrame, records: DataFrame, verbose: bool
+) -> list[str]:
+    """The run summary as lines; reads ``dead``/``records``, so call it
+    before any append to the db."""
+    lines = [f"files probed: {n_total}, ok: {n_total - n_fail}, failed: {n_fail}"]
     if n_fail:
-        print("failures:")
+        lines.append("failures:")
         for r in dead.select("path", "error").limit(20).collect():
-            print(f"  {r['path']}: {r['error']}")
+            lines.append(f"  {r['path']}: {r['error']}")
     if verbose:
         from .operators.parity import variant_report
 
-        print("variant report (titles with >1 file):")
+        lines.append("variant report (titles with >1 file):")
         # cap the driver-side collect like the failure list above: console
         # output is for humans, the full report belongs in the db files
         cap = 200
         rows = variant_report(records, detail_cols=("width", "height", "path")).limit(cap + 1).collect()
         for r in rows[:cap]:
-            print(f"  {r['title']}: {r['n_variants']} variants")
+            lines.append(f"  {r['title']}: {r['n_variants']} variants")
             for v in r["variants"]:
-                print(f"    {v['width']}x{v['height']}  {v['path']}")
+                lines.append(f"    {v['width']}x{v['height']}  {v['path']}")
         if len(rows) > cap:
-            print(f"  … and more (showing first {cap} titles)")
+            lines.append(f"  … and more (showing first {cap} titles)")
+    return lines
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -227,17 +258,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.merge_mode:
         # merge mode (:1361-1456): union-all TSV dbs → whole-line sort → header
         from .operators.parity import merge_metadata_dbs
-        from .sources.tsv import boundary_sorted, read_metadata_tsv
+        from .sources.tsv import boundary_sorted, read_metadata_tsv, tsv_writer
 
         dbs = [read_metadata_tsv(spark, p, header=True) for p in args.paths]
         merged = boundary_sorted(merge_metadata_dbs(dbs, sort_cols=[]))
         out = os.path.join(args.output, "metadata_db_merged.tsv")
-        (
-            merged.write.mode("overwrite")
-            .option("sep", "\t").option("header", "true")
-            .option("emptyValue", "").option("nullValue", "")
-            .csv(out)
-        )
+        tsv_writer(merged, header=True, mode="overwrite").csv(out)
         print(f"merged {len(dbs)} dbs -> {out}")
         return 0
 
@@ -247,49 +273,53 @@ def main(argv: list[str] | None = None) -> int:
         created = create_nomedia_markers(filtered_dirs(spark, args.paths))
         print(f".nomedia markers: {created.filter(F.col('status') == 'created').count()} created")
 
-    if args.percentage:
-        # two-pass headcount (:1545-1568) — one distributed count here
-        from .operators.pipeline import filter_candidates
-        from .sources.listing import list_files
+    from .operators.parity import update_new_files
+    from .operators.pipeline import filter_candidates
+    from .sources.listing import list_files
 
-        total = filter_candidates(list_files(spark, args.paths), assume_pruned=True).count()
-        print(f"files to probe: {total}")
+    listing = list_files(spark, args.paths, volume_label=_volume_label(args.paths)).cache()
+    probed = None
+    try:
+        candidates = filter_candidates(listing, assume_pruned=True)
+        if args.percentage:
+            # two-pass headcount (:1545-1568) — one count over the run's own listing
+            print(f"files to probe: {candidates.count()}")
 
-    records, dead, obs = _build_records(
-        spark,
-        args.paths,
-        args.probe_fixture,
-        no_audio=args.no_audio,
-        ffprobe_bin=args.ffprobe_bin,
-    )
+        if args.update_mode:
+            # update mode (:579-582, :1529-1532): anti-join the listing against
+            # the existing db's paths BEFORE probing — only new files, and
+            # earlier dead letters (which never enter the db), reach ffprobe
+            existing = _db_keys(spark, args.output, args.sink_format)
+            if existing is not None:
+                candidates = update_new_files(candidates, existing, key="path")
 
-    if args.update_mode:
-        # update mode (:579-582, :1529-1532): anti-join against the
-        # existing db's paths, append only the new rows
-        from .operators.parity import update_new_files
-        from .sources.tsv import from_boundary, read_metadata_tsv
-
-        db_path = os.path.join(args.output, "metadata_db.tsv")
-        if args.sink_format == "parquet":
-            db_path = os.path.join(args.output, "metadata_db.parquet")
-        try:
-            if args.sink_format == "parquet":
-                existing = spark.read.parquet(db_path)
-            else:
-                existing = from_boundary(read_metadata_tsv(spark, db_path, header=True))
-            records = update_new_files(records, existing, key="path")
-        except Exception:
-            pass  # no existing db — update degenerates to build (:1254-1283)
-        n_new = records.count()
-        if n_new:
-            _write(records, args.output, args.sink_format, mode="append")
-        print(f"update: appended {n_new} new rows")
-        _report(obs.get, dead, records, args.verbose)
-        return 0
-
-    path = _write(records, args.output, args.sink_format, mode="overwrite")
-    _report(obs.get, dead, records, args.verbose)
-    print(f"db written: {path}")
+        records, dead, probed = _build_records(
+            spark,
+            listing,
+            candidates,
+            args.probe_fixture,
+            no_audio=args.no_audio,
+            ffprobe_bin=args.ffprobe_bin,
+        )
+        # the one job that runs ffprobe: it fills the cache and counts it
+        n_total, n_fail = probed.agg(F.count(F.lit(1)), F.count("error")).first()
+        # every read precedes the write: an append to the db path drops
+        # cached plans that read it, and a recompute would re-probe
+        report = _report(n_total, n_fail, dead, records, args.verbose)
+        if args.update_mode:
+            n_new = n_total - n_fail
+            if n_new:
+                _write(records, args.output, args.sink_format, mode="append")
+            print(f"update: appended {n_new} new rows")
+            print("\n".join(report))
+        else:
+            path = _write(records, args.output, args.sink_format, mode="overwrite")
+            print("\n".join(report))
+            print(f"db written: {path}")
+    finally:
+        listing.unpersist()
+        if probed is not None:
+            probed.unpersist()
     return 0
 
 

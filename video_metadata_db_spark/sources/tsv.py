@@ -24,7 +24,7 @@ reference's Unix branch passes a bad operand and never worked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -36,6 +36,10 @@ from ..functions.scalar import (
     strip_drive_letter,
 )
 from ..schemas import METADATA_SCHEMA, TSV_HEADER
+
+
+#: temporary sort-key column of ``boundary_sorted`` (no header name clashes)
+_LINE = "_line"
 
 
 def _bcol(name: str) -> F.Column:
@@ -87,11 +91,34 @@ def boundary_sorted(boundary: DataFrame) -> DataFrame:
     (:767-833): the line = tab-joined fields, width padded to 4 leads,
     so this approximates ORDER BY width DESC with missing ("0000") last.
 
+    The key is the written line itself: NULL cells join as empty
+    strings (``concat_ws`` alone would skip them), and it is built once
+    per row as a column, so the sort compares stored bytes instead of
+    re-deriving both lines on every comparison that ties on the 8-byte
+    prefix (every line starts ``<width>\\t<hei``).
+
     Scale: a range-partitioned shuffle sort on one string key — Spark
     samples ranges, sorts each partition, spills as needed.
     """
-    line = F.concat_ws("\t", *[_bcol(c) for c in boundary.columns])
-    return boundary.orderBy(line.desc())
+    line = F.concat_ws("\t", *[F.coalesce(_bcol(c), F.lit("")) for c in boundary.columns])
+    return boundary.withColumn(_LINE, line).orderBy(F.col(_LINE).desc()).drop(_LINE)
+
+
+def tsv_writer(boundary: DataFrame, header: bool, mode: str) -> DataFrameWriter:
+    """The TSV db writer: tab-separated, NULL and empty cells written
+    empty, every cell verbatim.  Spark's CSV writer trims leading and
+    trailing whitespace by default, which would drop the ``{:>4}``
+    padding and the single-space subtitle sizes, and write lines that
+    differ from the keys ``boundary_sorted`` ordered them by."""
+    return (
+        boundary.write.mode(mode)
+        .option("sep", "\t")
+        .option("header", str(header).lower())
+        .option("emptyValue", "")
+        .option("nullValue", "")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+    )
 
 
 def write_metadata_tsv(
@@ -106,14 +133,7 @@ def write_metadata_tsv(
     boundary = to_boundary(records)
     if sort:
         boundary = boundary_sorted(boundary)
-    (
-        boundary.write.mode(mode)
-        .option("sep", "\t")
-        .option("header", str(header).lower())
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .csv(path)
-    )
+    tsv_writer(boundary, header, mode).csv(path)
 
 
 def db_name_for(root: str, volume_label: str) -> str:
@@ -133,15 +153,7 @@ def write_metadata_tsv_per_volume(
     boundary = boundary_sorted(to_boundary(records)).withColumn(
         "_volume", _bcol("Volume Label")
     )
-    (
-        boundary.write.mode(mode)
-        .partitionBy("_volume")
-        .option("sep", "\t")
-        .option("header", str(header).lower())
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .csv(base_path)
-    )
+    tsv_writer(boundary, header, mode).partitionBy("_volume").csv(base_path)
 
 
 _BOUNDARY_READ_SCHEMA = T.StructType(
